@@ -18,6 +18,7 @@ from wedge_parallel_triangle_counting_spark.operators.graph import (
     prepare_oriented,
     symmetrize,
 )
+from wedge_parallel_triangle_counting_spark.operators.checkpointing import checkpoint
 from wedge_parallel_triangle_counting_spark.operators.components import (
     connected_components,
 )
@@ -112,7 +113,7 @@ def _q_degrees_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # localCheckpoint, not collect: materializes the result on the
         # executors before the scratch table is dropped, without ever
         # pulling the (unbounded at scale) vertex table to the driver
-        return deg.localCheckpoint(eager=True)
+        return checkpoint(deg)
     finally:
         drop_bucketed(spark, table)
         shutil.rmtree(tmp, ignore_errors=True)
@@ -521,7 +522,7 @@ def _q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager localCheckpoint: pins the (bounded-by-#hosts, but still
     # distributed) result before the inputs are unpersisted — no
     # driver-side materialization
-    out = out.localCheckpoint(eager=True)
+    out = checkpoint(out)
     hg.unpersist()
     ids.unpersist()
     return out

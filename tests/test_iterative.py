@@ -8,6 +8,10 @@ import random
 import numpy as np
 import pytest
 
+from wedge_parallel_triangle_counting_spark.operators.checkpointing import (
+    _EAGER_EVERY,
+    checkpoint,
+)
 from wedge_parallel_triangle_counting_spark.operators.components import (
     connected_components,
 )
@@ -221,23 +225,14 @@ def test_pagerank_topics_matches_independent_runs(spark):
         assert abs(sum(by_topic[t].values()) - 1.0) < 1e-9
 
 
-def test_pagerank_topics_work_independent_of_topic_count(spark, monkeypatch):
+def test_pagerank_topics_work_independent_of_topic_count(spark):
     """The batching claim: T topic vectors ride ONE loop — the number
     of Spark jobs and stages must not grow with T (a per-topic loop
     would multiply both). Compared via the status tracker on job
-    groups around a T=1 and a T=4 run of the same graph/iterations.
-
-    The lineage depth bound (session._EAGER_EVERY: every Nth lazy
-    checkpoint process-wide is eager, +1 job when it lands inside a
-    run) is pushed out of reach — it would add a counter-position-
-    dependent job to one run and break the T-independence equality."""
+    groups around a T=1 and a T=4 run of the same graph/iterations."""
     from wedge_parallel_triangle_counting_spark.operators.pagerank import (
         pagerank_topics,
     )
-
-    import wedge_parallel_triangle_counting_spark.session as S
-
-    monkeypatch.setattr(S, "_EAGER_EVERY", 10**9)
 
     pairs = _random_directed(7, 40, 120)
     sc = spark.sparkContext
@@ -325,13 +320,9 @@ def test_components_strategies_agree(spark, seed):
     assert a == want
 
 
-@pytest.mark.parametrize("impl", ["agg", "window"])
-def test_star_round_impls_agree(spark, impl, monkeypatch):
-    """Both per-src min formulations of the star rounds (r4-j A/B)
-    produce identical labels."""
-    from wedge_parallel_triangle_counting_spark.operators import components as C
-
-    monkeypatch.setattr(C, "STAR_ROUND_IMPL", impl)
+def test_star_agrees_with_hashmin(spark):
+    """Star rounds and hashmin label a second sparse random graph
+    identically."""
     pairs = _random_directed(11, 70, 85)
     df = edges_df(spark, pairs)
     got = {r.v: r.component for r in connected_components(df, strategy="star").collect()}
@@ -844,14 +835,14 @@ def test_localcheckpoint_sanitizer_caps_size_estimate(spark):
     every round. Unchecked, the driver ends up doing BigInteger
     multiplication on multi-megabit numbers inside every stats walk
     (measured: a 500-vertex hashmin loop's round wall went 0.5 s ->
-    120 s by round 11). The session-installed sanitizer rebuilds the
+    120 s by round 11). checkpoint()'s sanitizer rebuilds the
     leaf without origin stats whenever the captured estimate exceeds
     2^64 bytes; this pins (a) the estimate stays <= 64 bits through an
     8-round triple-self-join chain and (b) the data is untouched."""
     from pyspark.sql import functions as F
 
     df = spark.range(100).select(F.col("id").alias("v"), F.col("id").alias("c"))
-    state = df.localCheckpoint(eager=True)
+    state = checkpoint(df)
     for _ in range(8):
         a = state.select(F.col("v").alias("av"), F.col("c").alias("ac"))
         b = state.select(F.col("v").alias("bv"), F.col("c").alias("bc"))
@@ -860,7 +851,7 @@ def test_localcheckpoint_sanitizer_caps_size_estimate(spark):
             .join(b, state.v == F.col("bv"))
             .select("v", "c")
         )
-        state = rnd.localCheckpoint(eager=True)
+        state = checkpoint(rnd)
     plan = state._jdf.queryExecution().analyzed()
     assert plan.getClass().getSimpleName() == "LogicalRDD"
     size = plan.stats().sizeInBytes()  # py4j converts sane BigInts to int
@@ -869,29 +860,95 @@ def test_localcheckpoint_sanitizer_caps_size_estimate(spark):
     assert state.agg(F.sum("c")).first()[0] == 4950
 
 
-def test_lazy_localcheckpoint_defused_but_persisted(spark, monkeypatch):
-    """r6: a LAZY localCheckpoint's RDD must carry NO checkpointData
-    (its doCheckpoint on a broadcast-exchange thread deadlocks the JVM
+def test_lazy_localcheckpoint_defused_but_persisted(spark):
+    """r6: a LAZY checkpoint's RDD must carry NO checkpointData (its
+    doCheckpoint on a broadcast-exchange thread deadlocks the JVM
     against DAGScheduler.getCacheLocs — lock-order inversion on the
     global RDDCheckpointData$ monitor, jstack-confirmed) while keeping
     the persistence that localCheckpoint sets BEFORE marking, so
-    caching behavior is unchanged. Eager checkpoints are untouched.
-
-    _EAGER_EVERY is pushed out of reach: every Nth lazy checkpoint
-    process-wide legitimately stays a real eager checkpoint (the
-    lineage depth bound), which would make this assert flaky."""
+    caching behavior is unchanged. Eager checkpoints are untouched."""
     from pyspark.sql import functions as F
 
-    import wedge_parallel_triangle_counting_spark.session as S
-
-    monkeypatch.setattr(S, "_EAGER_EVERY", 10**9)
     df = spark.range(500).select(F.col("id").alias("v"))
-    lazy = df.localCheckpoint(eager=False)
+    lazy = checkpoint(df, 0)
     plan = lazy._jdf.queryExecution().analyzed()
     assert plan.getClass().getSimpleName() == "LogicalRDD"
     assert not plan.rdd().checkpointData().isDefined()
     assert plan.rdd().getStorageLevel().useMemory()
     assert plan.rdd().getStorageLevel().useDisk()
     assert lazy.count() == 500
-    eager = df.localCheckpoint(eager=True)
+    eager = checkpoint(df)
     assert eager._jdf.queryExecution().analyzed().rdd().checkpointData().isDefined()
+
+
+def test_checkpoint_bounds_each_chain_separately(spark):
+    """Two lazily checkpointed chains advanced in the same round, the
+    shape of katz (walks, then acc built from walks): each chain gets
+    its own depth bound. Rounds before _EAGER_EVERY-1 are defused
+    (persisted, no checkpoint mark); round _EAGER_EVERY-1 of BOTH
+    chains is a real, materialized checkpoint."""
+    from pyspark.sql import functions as F
+
+    def rdd(df):
+        return df._jdf.queryExecution().analyzed().rdd()
+
+    walks = spark.range(50).select(F.col("id").alias("v"), F.lit(1).alias("w"))
+    acc = walks.select("v", F.lit(0).alias("acc"))
+    for k in range(_EAGER_EVERY):
+        walks = checkpoint(walks.select("v", (F.col("w") * 2).alias("w")), k)
+        acc = checkpoint(
+            acc.join(walks, "v").select("v", (F.col("acc") + F.col("w")).alias("acc")),
+            k,
+        )
+        for df in (walks, acc):
+            if k < _EAGER_EVERY - 1:
+                assert not rdd(df).checkpointData().isDefined(), k
+                assert rdd(df).getStorageLevel().useDisk(), k
+            else:
+                assert rdd(df).isCheckpointedAndMaterialized(), k
+    want = sum(2 ** (k + 1) for k in range(_EAGER_EVERY))
+    assert {r.acc for r in acc.collect()} == {want}
+
+
+def test_stock_localcheckpoint_signature_untouched(spark):
+    """pyspark's own 3-argument localCheckpoint works: importing the
+    package patches nothing."""
+    from pyspark import StorageLevel
+
+    df = spark.range(40).localCheckpoint(True, StorageLevel.DISK_ONLY)
+    level = df._jdf.queryExecution().analyzed().rdd().getStorageLevel()
+    assert level.useDisk() and not level.useMemory()
+    assert df.count() == 40
+
+
+def test_session_sets_thread_stack_for_driver_and_executors(spark):
+    conf = spark.sparkContext.getConf()
+    for key in ("spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions"):
+        assert "-Xss8m" in conf.get(key, ""), key
+
+
+def test_hashmin_warns_when_unconverged(spark, monkeypatch):
+    """An 80-edge chain needs ~80 plain hashmin rounds; stopping at 5
+    returns partial labels, which must warn and be flagged
+    unconverged in the loop history."""
+    import warnings
+
+    import wedge_parallel_triangle_counting_spark.operators.components as C
+
+    loops = []
+
+    class RecordingLoop(C.CheckpointedLoop):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            loops.append(self)
+
+    monkeypatch.setattr(C, "CheckpointedLoop", RecordingLoop)
+    chain = [(i, i + 1) for i in range(80)]
+    with pytest.warns(RuntimeWarning, match=r"hashmin.*5 rounds"):
+        connected_components(edges_df(spark, chain), strategy="hashmin", max_iters=5)
+    assert loops[-1].history[-1]["extra"]["converged"] is False
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        connected_components(edges_df(spark, K3), strategy="hashmin")
+    assert loops[-1].history[-1]["extra"]["converged"] is True

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import CheckpointedLoop, loop_partitions
+from .checkpointing import CheckpointedLoop, checkpoint, loop_partitions
 from .graph import normalize_edges
 
 
@@ -173,13 +173,15 @@ def hits(
     # or a resumed-finished run) — then the state itself carries both
     # columns (initial or durable-snapshot schema).
     if a is None:
-        out = verts.join(state, "v", "left").select(
-            "v",
-            F.coalesce("hub", F.lit(0.0)).alias("hub"),
-            F.coalesce("authority", F.lit(0.0)).alias("authority"),
-        ).localCheckpoint(eager=True)
+        out = checkpoint(
+            verts.join(state, "v", "left").select(
+                "v",
+                F.coalesce("hub", F.lit(0.0)).alias("hub"),
+                F.coalesce("authority", F.lit(0.0)).alias("authority"),
+            )
+        )
     else:
-        out = (
+        out = checkpoint(
             verts.join(state.select("v", "hub"), "v", "left")
             .join(a, "v", "left")
             .select(
@@ -187,7 +189,6 @@ def hits(
                 F.coalesce("hub", F.lit(0.0)).alias("hub"),
                 F.coalesce("authority", F.lit(0.0)).alias("authority"),
             )
-            .localCheckpoint(eager=True)
         )
     for c in prev_scratch:
         c.unpersist()

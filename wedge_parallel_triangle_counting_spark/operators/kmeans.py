@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .checkpointing import checkpoint
+
 OFFSET = 1 << 24
 SCALE = 1_000_000
 
@@ -103,27 +105,31 @@ def kmeans_fit(
     init = "hash" (k smallest-md5 vectors) or "farthest"
     (deterministic k-means++-style farthest-first seeding)."""
     spark = embeddings.sparkSession
-    vecs = embeddings.select(
-        F.col(id_col).alias("vec_id"), _quantize(F.col(vec_col)).alias("q")
-    ).localCheckpoint(eager=True)
+    vecs = checkpoint(
+        embeddings.select(
+            F.col(id_col).alias("vec_id"), _quantize(F.col(vec_col)).alias("q")
+        )
+    )
 
     seed_h = _h64(F.concat(F.lit("km:"), F.col("vec_id").cast("string")))
     from pyspark.sql.window import Window
 
     if init == "farthest":
-        cents = _farthest_init(vecs, k).localCheckpoint(eager=True)
+        cents = checkpoint(_farthest_init(vecs, k))
     elif init == "hash":
         hinit = (
             vecs.select("vec_id", "q", seed_h.alias("h"))
             .orderBy("h", "vec_id")
             .limit(k)
         )
-        cents = hinit.select(
-            (
-                F.row_number().over(Window.orderBy("h", "vec_id")) - 1
-            ).alias("cid"),
-            F.col("q").alias("cq"),
-        ).localCheckpoint(eager=True)
+        cents = checkpoint(
+            hinit.select(
+                (
+                    F.row_number().over(Window.orderBy("h", "vec_id")) - 1
+                ).alias("cid"),
+                F.col("q").alias("cq"),
+            )
+        )
     else:
         raise ValueError(f"unknown init {init!r}")
 
@@ -134,7 +140,7 @@ def kmeans_fit(
     )
 
     def _update(asg):
-        return (
+        return checkpoint(
             asg.select("cluster", F.posexplode("q").alias("pos", "val"))
             .groupBy("cluster", "pos")
             .agg(F.expr("sum(val) div count(*)").alias("cv"))
@@ -145,7 +151,6 @@ def kmeans_fit(
                 ).alias("pv")
             )
             .select("cid", F.col("pv.cv").alias("cq"))
-            .localCheckpoint(eager=True)
         )
 
     assign = None
@@ -158,7 +163,7 @@ def kmeans_fit(
             .select("vec_id", "q", F.col("m.cid").alias("cluster"))
         )
         if it == num_iters - 1:
-            assign = assign.localCheckpoint(eager=True)
+            assign = checkpoint(assign)
             break
         cents = _update(assign)
     return assign, _update(assign)

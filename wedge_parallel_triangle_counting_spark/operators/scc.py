@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import CheckpointedLoop, loop_partitions
+from .checkpointing import CheckpointedLoop, checkpoint, loop_partitions
 from .graph import normalize_edges
 
 
@@ -140,15 +140,15 @@ def strongly_connected_components(
         fingerprint={"edges": m} if checkpoint_dir else None,
     )
 
-    active = (
+    active = checkpoint(
         e.select(F.col("src").alias("v"))
         .unionByName(e.select(F.col("dst").alias("v")))
         .distinct()
         .repartition(npart, "v")
-        .localCheckpoint(eager=True)
     )
     done: DataFrame | None = None
     step = 0  # global step counter for the checkpoint loop history
+    active_round = 0  # round index of the `active` checkpoint chain
 
     n_all = active.count()
 
@@ -176,9 +176,8 @@ def strongly_connected_components(
             ).join(active.withColumnRenamed("v", "dst"), "dst", "left_semi")
             srcs = ef.select(F.col("src").alias("v")).distinct()
             dsts = ef.select(F.col("dst").alias("v")).distinct()
-            new_active = srcs.join(dsts, "v", "left_semi").localCheckpoint(
-                eager=False
-            )
+            new_active = checkpoint(srcs.join(dsts, "v", "left_semi"), active_round)
+            active_round += 1
             n_new = new_active.count()
             if n_new == n_active:
                 break  # new ⊆ old with equal count ⇒ identical set
@@ -192,7 +191,7 @@ def strongly_connected_components(
             done = (
                 assigned
                 if done is None
-                else done.unionByName(assigned).localCheckpoint(eager=False)
+                else checkpoint(done.unionByName(assigned), 2 * outer)
             )
         if n_active == 0:
             break
@@ -270,8 +269,8 @@ def strongly_connected_components(
             )
             new_frontier = grown.join(marked, "v", "left_anti")
             marked = loop.step(marked.unionByName(new_frontier), step, eager=False)
+            frontier = checkpoint(new_frontier, step)
             step += 1
-            frontier = new_frontier.localCheckpoint(eager=False)
             n_new = frontier.count()
             loop.history[-1]["extra"].update(
                 {"outer": outer, "phase": "mark", "frontier": n_new}
@@ -288,11 +287,12 @@ def strongly_connected_components(
         done = (
             assigned
             if done is None
-            else done.unionByName(assigned).localCheckpoint(eager=False)
+            else checkpoint(done.unionByName(assigned), 2 * outer + 1)
         )
-        active = active.join(marked.select("v"), "v", "left_anti").localCheckpoint(
-            eager=False
+        active = checkpoint(
+            active.join(marked.select("v"), "v", "left_anti"), active_round
         )
+        active_round += 1
         if own_ea:  # fwd/rev (outer round 0 full-graph reuse) stay cached
             ea.unpersist()
             ra.unpersist()
@@ -304,7 +304,7 @@ def strongly_connected_components(
                 "raise max_outer"
             )
 
-    out = done.repartition(npart, "v").localCheckpoint(eager=True)
+    out = checkpoint(done.repartition(npart, "v"))
     e.unpersist()
     rev.unpersist()
     return out

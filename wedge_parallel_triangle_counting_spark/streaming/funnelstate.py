@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.checkpointing import checkpoint
+
 OUT_SCHEMA = "user_id long, s1_us long, s2_us long, s3_us long"
 STATE_SCHEMA = "tss array<long>, tps array<long>"
 
@@ -163,11 +165,7 @@ def run_streaming_funnel(
     batches: list[DataFrame] = []
 
     def capture(df: DataFrame, batch_id: int) -> None:
-        batches.append(
-            df.withColumn("_batch", F.lit(int(batch_id))).localCheckpoint(
-                eager=True
-            )
-        )
+        batches.append(checkpoint(df.withColumn("_batch", F.lit(int(batch_id)))))
 
     q = (
         agg.writeStream.foreachBatch(capture)
@@ -187,9 +185,8 @@ def run_streaming_funnel(
     rn = F.row_number().over(
         Window.partitionBy("user_id").orderBy(F.desc("_batch"))
     )
-    return (
+    return checkpoint(
         allb.withColumn("_rn", rn)
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_batch")
-        .localCheckpoint(eager=True)
     )
